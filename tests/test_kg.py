@@ -250,6 +250,9 @@ def test_canonical_entities_singletons_and_clusters(spark):
 
 
 def test_materialize_manifest_and_replay(spark, tmp_path):
+    # the session stays static: the dynamic overwrite that the bucket
+    # replay below relies on must come from the per-write option alone
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     pages = synth_pages(spark, 300, seed=42)
     segments = pages_to_segments(pages).select("url", "seg_idx", "page", "text")
     path = str(tmp_path / "segments")
@@ -267,6 +270,7 @@ def test_materialize_manifest_and_replay(spark, tmp_path):
 
     # idempotent replay of just those buckets restores identical content
     write_partitioned(segments, path, "url", n_buckets=8, buckets=bad)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
     assert all(v for v in verify_manifest(spark, path).values())
 
     # snapshot lineage: first commit touched all 8 buckets, the replay

@@ -76,24 +76,26 @@ def test_linking_plan_has_no_pair_join(spark):
     # broadcast to the fused shape: census agg + broadcast + band
     # repartition + distinct = 4 (AQE may append reads, not exchanges)
     assert "LeftSemi" in plan
+    # the hint must stay: without it the planner picks a sort-merge
+    # LeftSemi, drops the scorer's own repartition + sort as redundant,
+    # and blocks stop arriving contiguously (edges are lost)
+    assert "BroadcastExchange" in plan
     assert plan.count("Exchange") <= 4
 
 
 def test_lsh_candidate_pairs_keyed_by_band_key(spark):
-    """The explicit pair path must key its self-join by the natural
-    (band, key) block identity — monotonically_increasing_id is only
-    consistent across the join's two evaluation branches under a fixed
-    partition layout, which AQE/recompute can break."""
-    from trainable_entity_extractor_spark.kg.linking import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    """The (band, key) block self-join must be keyed by the natural block
+    identity — monotonically_increasing_id is only consistent across the
+    join's two evaluation branches under a fixed partition layout, which
+    AQE/recompute can break. `link_mentions_portable` is the package's
+    remaining explicit candidate-pair path."""
+    from trainable_entity_extractor_spark.kg.linking import link_mentions_portable
 
     mentions = spark.createDataFrame(
         [(f"m{i}", f"shared phrase body {i % 5}") for i in range(40)],
         "mention_id string, mention string",
     )
-    pairs = lsh_candidate_pairs(minhash_signatures(mentions))
+    pairs = link_mentions_portable(mentions, threshold=0.5)
     assert "monotonically_increasing_id" not in _optimized(pairs)
     # identical groups share signatures -> every within-group pair MUST
     # appear (LSH may add cross-group near-collision candidates on top —

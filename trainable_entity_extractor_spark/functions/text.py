@@ -35,24 +35,10 @@ def collapse_whitespace(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def remove_all_spaces(col: Column) -> Column:
-    """X2: reference InputWithoutSpaces.py:11-16."""
-    return F.regexp_replace(col, r"\s", "")
-
-
-def clean_alnum_words(col: Column) -> Column:
-    """X5-analog of TextToMultiOptionMethod.get_text: keep only alpha/digit
-    chars inside each whitespace word, drop emptied words."""
-    return F.array_join(
-        F.filter(
-            F.transform(
-                F.split(collapse_whitespace(col), " "),
-                lambda w: F.regexp_replace(w, r"[^\p{L}\p{N}]", ""),
-            ),
-            lambda w: w != "",
-        ),
-        " ",
-    )
+def normalize_text(col: Column) -> Column:
+    """Lower-cased collapse_whitespace: the one text normalizer shared by
+    document fingerprints, triple matching and mention signatures."""
+    return F.lower(collapse_whitespace(col))
 
 
 def sanitize_language(col: Column) -> Column:
@@ -62,14 +48,6 @@ def sanitize_language(col: Column) -> Column:
 
 
 # ---------------- Python twins (for oracles / driver-side tiny data) ------
-
-def py_collapse_whitespace(text: str | None) -> str:
-    return " ".join((text or "").split())
-
-
-def py_remove_all_spaces(text: str | None) -> str:
-    return "".join((text or "").split())
-
 
 def py_clean_alnum_words(text: str | None) -> str:
     words = []

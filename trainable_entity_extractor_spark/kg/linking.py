@@ -2,17 +2,17 @@
 mention shingles + batched pair scoring (north_rule; SURVEY.md §7.1).
 
 Spark-first design, tuned from profiling (see BENCH notes):
-- signatures are a SINGLE narrow projection: per row,
-  sig[i] = array_min(transform(shingles, s -> hash(s, i))). No explode, no
-  groupBy, no shuffle — whole-stage codegen end to end. At 10^12 docs this
-  is the difference between a map-only stage and a petabyte shuffle.
+- signatures are map-only: a batch-vectorized numpy MinHash kernel over
+  char k-grams behind an Arrow pandas UDF. No explode, no groupBy, no
+  shuffle. At 10^12 docs this is the difference between a map-only stage
+  and a petabyte shuffle.
 - LSH banding (b bands × r rows) buckets candidates; blocks larger than
   `block_cap` are dropped (hot-key/skew mitigation: a mega-block from a
   high-frequency surface form would contribute O(n²) pairs).
-- pair scoring uses the MinHash signature-agreement estimator
-  (fraction of equal slots ≈ Jaccard, unbiased) — no shingle arrays are
-  carried through the join. Exact Jaccard rescoring is available for the
-  survivors via `exact_rescore`.
+- pair scoring (`score_blocks`) uses the MinHash signature-agreement
+  estimator (fraction of equal slots ≈ Jaccard, unbiased), computed
+  inside each block by a numpy kernel — no pair set and no shingle
+  arrays are ever materialized.
 
 Deterministic: hand-rolled murmur3 (`F.hash`) rather than pyspark.ml
 MinHashLSH whose seeds are not pinned across versions (SURVEY §7.3).
@@ -23,23 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import normalize_text
+
 DEFAULT_PERMS = 32
 # 5 bands x 6 rows (30 of 32 slots): P(candidate | j=0.9) ≈ 98% while
 # mid-similarity noise pairs (j≈0.5) only block at ~8% — an order of
 # magnitude fewer candidates than r=4 banding on vocabulary-correlated
 # corpora. Precision comes from the cheap signature-agreement scorer.
 DEFAULT_BANDS = 5
-
-
-def normalize_mention(col):
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def shingles(col, k: int = 3):
-    """Character k-gram shingle array (distinct) of a normalized mention."""
-    n = F.length(col)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: col.substr(i, F.lit(k))))
 
 
 def _perm_coeffs(n_perms: int, seed: int = 42):
@@ -193,122 +184,26 @@ def minhash_signatures(
     (banding, scoring, oracle entries) derives from this one function —
     so nothing persisted depends on cross-version bit-stability."""
     import pandas as pd
-    from pyspark.sql import types as T
 
     def _sig(texts: pd.Series) -> pd.Series:
         return pd.Series(_minhash_kernel(texts.tolist(), n_perms, k, max_chars))
 
     _sig.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    sig_udf = F.pandas_udf(_sig, T.ArrayType(T.LongType()))
+    sig_udf = F.pandas_udf(_sig, "array<bigint>")
 
-    # norm staged once: the old form evaluated normalize_mention (a regex
+    # norm staged once: the old form evaluated the normalizer (a regex
     # pass) twice per row — once for the norm column, once inside the
     # UDF's substring argument. CollapseProject keeps the stage because
     # the non-cheap alias is referenced twice (SPARK-36718).
     staged = mentions.select(
         F.col(id_col).alias("mention_id"),
-        normalize_mention(F.col(text_col)).alias("norm"),
+        normalize_text(F.col(text_col)).alias("norm"),
     )
     return staged.select(
         "mention_id",
         "norm",
         sig_udf(F.substring("norm", 1, max_chars)).alias("sig"),
     )
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    n_perms: int = DEFAULT_PERMS,
-    bands: int = DEFAULT_BANDS,
-    block_cap: int = 64,
-) -> DataFrame:
-    """Band the signatures, bucket-join within bands, cap oversized blocks.
-
-    Returns distinct (a, b) candidate pairs with a < b.
-    """
-    rows_per_band = n_perms // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(F.concat_ws(",", *[F.element_at("sig", b * rows_per_band + i + 1) for i in range(rows_per_band)])).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select("mention_id", F.explode(band_structs).alias("bk")).select(
-        "mention_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-
-    # One groupBy gives blocks AND the size cap (skew mitigation, north
-    # rule) — no count-join back onto the banded rows. Pair generation is a
-    # bounded self-join keyed by the natural (band, key) block identity —
-    # NOT monotonically_increasing_id, whose values are only consistent
-    # across the self-join's two evaluation branches under a fixed
-    # partition layout (AQE/recompute can break that).
-    members = (
-        banded.groupBy("band", "key")
-        .agg(F.collect_list("mention_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= block_cap))
-        .select("band", "key", F.explode("ids").alias("m"))
-    )
-    left = members.select("band", "key", F.col("m").alias("a"))
-    right = members.select("band", "key", F.col("m").alias("b"))
-    # distinct BEFORE scoring: a pair appearing in several bands would
-    # otherwise flow through the two signature joins once per band —
-    # deduping 16-byte (a,b) rows costs one cheap shuffle and shrinks the
-    # scoring joins by the duplication factor (bands-1 in the worst case).
-    return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def score_pairs(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    threshold: float = 0.6,
-    n_perms: int = DEFAULT_PERMS,
-    exact_rescore: bool = False,
-    mentions: DataFrame | None = None,
-    k: int = 3,
-) -> DataFrame:
-    """Signature-agreement Jaccard estimate per candidate pair; optional
-    exact rescoring of survivors against the shingle sets."""
-    sa = sigs.select(F.col("mention_id").alias("a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("mention_id").alias("b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        / F.lit(float(n_perms))
-    )
-    scored = (
-        pairs.join(sa, "a").join(sb, "b").select("a", "b", est.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .distinct()  # multi-band duplicates — cheap after the score filter
-    )
-    if not exact_rescore:
-        return scored
-
-    assert mentions is not None, "exact_rescore needs the mentions frame"
-    sh = mentions.select(
-        F.col(mentions.columns[0]).alias("mid"),
-        shingles(normalize_mention(F.col(mentions.columns[1])), k).alias("sh"),
-    )
-    exact = (
-        scored.join(sh.select(F.col("mid").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("mid").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-    )
-    return exact.filter(F.col("jaccard") >= threshold)
 
 
 def link_mentions_portable(
@@ -368,7 +263,7 @@ def link_mentions_portable(
     # self-join keyed by the natural (band, key) block identity — NOT
     # monotonically_increasing_id, whose values only agree across the two
     # evaluation branches under a fixed partition layout (AQE/recompute
-    # can break that); same fix as lsh_candidate_pairs above.
+    # can break that).
     members = blocks.select("band", "key", F.explode("ids").alias("m"))
     pairs = (
         members.select("band", "key", F.col("m").alias("a"))
@@ -396,22 +291,20 @@ def score_blocks(
     n_perms: int = DEFAULT_PERMS,
     bands: int = DEFAULT_BANDS,
     block_cap: int = 64,
-    lane_bits: int = 15,
-    prefilter_broadcast: bool = True,
 ) -> DataFrame:
     """Fused banding + in-block pair scoring.
 
-    Semantically identical to lsh_candidate_pairs → score_pairs, but the
-    pairwise signature-agreement scores are computed INSIDE each block row
-    (whose collect_list already holds every member's signature) by a
-    vectorized numpy kernel — so the quadratic pair set never exists as a
-    DataFrame. On duplication-heavy corpora pairs outnumber mentions
-    ~30:1 at cap 64; materializing them and joining the signature table
-    twice was >80% of pipeline wall-time at 400k pages. Cost now: ONE
-    groupBy shuffle carrying signatures, then a map stage.
+    Semantically identical to the naive pair-join scorer (band self-join,
+    then two signature joins, then the agreement filter; it lives on as
+    the reference in tests/test_property_linking.py), but the pairwise
+    signature-agreement scores are computed INSIDE each block by a
+    vectorized numpy kernel over the block's contiguous sorted rows — so
+    the quadratic pair set never exists as a DataFrame. On
+    duplication-heavy corpora pairs outnumber mentions ~30:1 at cap 64;
+    materializing them and joining the signature table twice was >80% of
+    pipeline wall-time at 400k pages. Cost now: a skinny block census,
+    ONE (band, key) shuffle carrying signatures, then a map stage.
     """
-    from pyspark.sql import types as T
-
     rows_per_band = n_perms // bands
     band_structs = F.array(
         *[
@@ -432,28 +325,20 @@ def score_blocks(
     # ~50s/400k-pages in Arrow struct materialization alone; flat columns
     # convert to a numpy matrix in microseconds.
     #
-    # 15-bit lanes, not the full 64-bit MinHash values: the agreement
-    # estimator only tests slot EQUALITY, so each slot ships as its low
-    # 15 bits (ANSI-safe bitwiseAND, fits smallint). A collision between
-    # two DIFFERENT slot values inflates one pair's agreement by 1/32
-    # with probability 2^-15 — unmeasurable against the estimator's own
-    # +-1/32 quantization — while the banding keys (full-width F.hash of
-    # the band slice) stay exact. This cuts the stage's shuffle (banded
-    # rows x bands) from 256 to 64 bytes of signature per row. Measured
-    # wall-clock on the single-box sandbox is unchanged (A/B medians
-    # 18.8 s vs 19.8 s at 240k pages — the stage is bound by the Python
-    # pair kernel there, ~77 ms per 10k-row Arrow batch of pair
-    # generation, not by shuffle bytes); the 4x byte cut is kept for the
-    # network/disk-bound shuffle of a real cluster.
-    if lane_bits == 15:
-        sig_cols = [
-            F.element_at("sig", i + 1).bitwiseAND(F.lit(32767)).cast("smallint").alias(f"s{i}")
-            for i in range(n_perms)
-        ]
-    else:  # full-width lanes (A/B reference path)
-        sig_cols = [F.element_at("sig", i + 1).alias(f"s{i}") for i in range(n_perms)]
-    # (the scorer reads the lane matrix with to_numpy(), so the numpy
-    # dtype follows the column type above — no separate cast needed)
+    # 15-bit lanes: the agreement estimator only tests slot EQUALITY, so
+    # each slot ships as its low 15 bits (ANSI-safe bitwiseAND, fits
+    # smallint; the scorer's numpy dtype follows). A collision between two
+    # DIFFERENT slot values inflates one pair's agreement by 1/32 with
+    # probability 2^-15, far below the estimator's own 1/32 quantization,
+    # and the banding keys (full-width F.hash of the band slice) stay
+    # exact. Signature bytes per shuffled row drop from 256 to 64: wall
+    # time on one box is unchanged (the Python pair kernel bounds the
+    # stage there), the cut is for a cluster's network-bound shuffle.
+    lanes = [f"s{i}" for i in range(n_perms)]
+    sig_cols = [
+        F.element_at("sig", i + 1).bitwiseAND(F.lit(32767)).cast("smallint").alias(lane)
+        for i, lane in enumerate(lanes)
+    ]
     banded = sigs.select("mention_id", "sig", F.explode(band_structs).alias("bk")).select(
         "mention_id",
         *sig_cols,
@@ -468,11 +353,12 @@ def score_blocks(
     # census is a second, SKINNY pass over the (checkpointed) signatures:
     # only (band, key) ever shuffles (partial-agg'd 12-byte rows), and the
     # qualifying key set (~7% of banded rows) broadcasts at ~1 MB here.
-    # At cluster scale with >10^8 qualifying blocks the broadcast no
-    # longer fits: AQE's runtime size check keeps the hint honest locally,
-    # and `prefilter_broadcast=False` lets the planner fall back to a
-    # shuffled semi-join whose big-side exchange is the same (band, key)
-    # hash partitioning the scorer needs anyway.
+    # The F.broadcast hint is obeyed at ANY size (no threshold or AQE
+    # override), so >10^8 qualifying blocks on a cluster can OOM this
+    # build side: an open risk. It stays because without it the planner
+    # picks a sort-merge LeftSemi, drops the repartition + sort below as
+    # redundant, and blocks stop arriving contiguously: a 100k-page
+    # run_pipeline (seed 42, 64 files) gave 18,060 of 72,835 edges.
     keys_only = sigs.select(F.explode(band_structs).alias("bk")).select(
         F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
@@ -482,50 +368,30 @@ def score_blocks(
         .filter((F.col("_n") >= 2) & (F.col("_n") <= block_cap))
         .select("band", "key")
     )
-    if prefilter_broadcast:
-        qualifying = F.broadcast(qualifying)
-    pruned = banded.join(qualifying, ["band", "key"], "left_semi")
+    pruned = banded.join(F.broadcast(qualifying), ["band", "key"], "left_semi")
     # one hash shuffle co-locates each block; an in-partition sort makes
     # blocks contiguous so the scorer streams them without any grouping agg
-    spark = sigs.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = int(sigs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     arranged = pruned.repartition(width, "band", "key").sortWithinPartitions("band", "key")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("a", T.StringType()),
-            T.StructField("b", T.StringType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
     npf = float(n_perms)
 
-    # mapInArrow, not mapInPandas (round 6, guide §4.2): the scorer's
-    # per-batch work is pure numpy over the lane matrix plus an id
-    # gather for the surviving pairs. The pandas form boxed every
-    # mention_id string into a Python object and paid pd.concat per
-    # carried block; here ids stay Arrow buffers end to end and only the
-    # pair-selected ids are materialized by a vectorized take/if_else.
-    # Measured NEUTRAL on this single-box host at 100k pages (the
-    # boundary is dominated by the Arrow transfer itself, ~1 s either
-    # way) — kept because the avoided per-string boxing scales with
-    # block density and batch count, which grow with corpus size.
+    # mapInArrow, not mapInPandas (guide §4.2): ids stay Arrow buffers end
+    # to end and only the pair-selected ids are materialized by a
+    # vectorized take/if_else, instead of boxing every mention_id into a
+    # Python object. Neutral at 100k pages on one box (the Arrow transfer
+    # dominates); the avoided boxing grows with block density.
     def _score(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         triu_cache: dict[int, tuple] = {}
-        col_idx = None  # resolved from the first batch's schema
 
-        def emit(band, key, sig, ids):
-            n = len(band)
-            if n == 0:
-                return None
-            change = np.flatnonzero((band[1:] != band[:-1]) | (key[1:] != key[:-1])) + 1
-            starts = np.concatenate([[0], change])
-            ends = np.concatenate([change, [n]])
-            sizes = ends - starts
+        def emit(bounds, sig, ids):
+            """Score the blocks [bounds[i], bounds[i + 1]) of sig/ids."""
+            starts = bounds[:-1]
+            sizes = np.diff(bounds)
             # size the pair scratch from the blocks that will actually emit:
             # over-cap blocks are skipped below (skew guard), so counting
             # them here would allocate O(s^2) scratch for a hot-key
@@ -577,13 +443,10 @@ def score_blocks(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            if col_idx is None:
-                col_idx = {name: i for i, name in enumerate(batch.schema.names)}
-                sidx = [col_idx[f"s{i}"] for i in range(n_perms)]
-            band = batch.column(col_idx["band"]).to_numpy()
-            key = batch.column(col_idx["key"]).to_numpy()
-            sig = np.column_stack([batch.column(i).to_numpy() for i in sidx])
-            ids = batch.column(col_idx["mention_id"])
+            band = batch.column("band").to_numpy()
+            key = batch.column("key").to_numpy()
+            sig = np.column_stack([batch.column(lane).to_numpy() for lane in lanes])
+            ids = batch.column("mention_id")
             if skip_key is not None:
                 keep = ~((band == skip_key[0]) & (key == skip_key[1]))
                 if not keep.any():
@@ -604,15 +467,16 @@ def score_blocks(
                 carry = None
             else:
                 carry = (band[last_start:], key[last_start:], sig[last_start:], ids.slice(last_start))
-            out = emit(band[:last_start], key[:last_start], sig[:last_start], ids.slice(0, last_start))
+            # every block before the trailing one is complete
+            out = emit(np.concatenate([[0], change]), sig, ids)
             if out is not None:
                 yield out
-        if carry is not None and len(carry[0]):
-            out = emit(*carry)
+        if carry is not None:
+            out = emit(np.array([0, len(carry[0])]), carry[2], carry[3])
             if out is not None:
                 yield out
 
-    edges = arranged.mapInArrow(_score, schema=out_schema)
+    edges = arranged.mapInArrow(_score, schema="a string, b string, jaccard double")
     # a pair can surface in several bands with the same score — dedup the
     # (small, post-threshold) edge set
     return edges.distinct()
@@ -626,7 +490,6 @@ def link_mentions(
     n_perms: int = DEFAULT_PERMS,
     bands: int = DEFAULT_BANDS,
     block_cap: int = 64,
-    prefilter_broadcast: bool = True,
 ) -> DataFrame:
     """Full Stage D: mentions → similarity edges (a, b, jaccard).
 
@@ -642,7 +505,4 @@ def link_mentions(
         .select("mention_id", "sig")
         .localCheckpoint(eager=False)
     )
-    return score_blocks(
-        sigs, threshold, n_perms, bands, block_cap,
-        prefilter_broadcast=prefilter_broadcast,
-    )
+    return score_blocks(sigs, threshold, n_perms, bands, block_cap)

@@ -51,24 +51,20 @@ def write_partitioned(
     """Write df bucketed by hash(key); dynamic partition overwrite so a
     replay of a bucket subset only rewrites those directories. Returns the
     manifest dict (also persisted alongside the data)."""
-    spark = df.sparkSession
     bucketed = with_bucket(df, key, n_buckets)
     if buckets is not None:
         bucketed = bucketed.filter(F.col("bucket").isin(buckets))
 
     stats = {int(r["bucket"]): r for r in content_stats(bucketed).collect()}
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            bucketed.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # a per-write option: setting the session conf races concurrent writers
+    (
+        bucketed.repartition("bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
     manifest_path = Path(path) / "_manifest.json"
     manifest = {

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import normalize_text
+
 
 def options_df(spark, options: list[tuple[str, str]]) -> DataFrame:
     """Small dimension (id, label) — always broadcast, never shuffled."""
@@ -42,7 +44,7 @@ def extract_triples(
     Returns TRIPLES_SCHEMA-shaped rows: first appearance per (url, option).
     """
     seg = segments.select(
-        "url", "seg_idx", "page", F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))).alias("norm_text"), F.col("text").alias("segment_text")
+        "url", "seg_idx", "page", normalize_text(F.col("text")).alias("norm_text"), F.col("text").alias("segment_text")
     )
     opt = F.broadcast(
         options.select(

@@ -16,15 +16,10 @@ from typing import Any
 
 import pandas as pd
 
-from ..domain import ExtractionContext
 from ..functions import rexpy_lite
 from ..functions.fuzzy import text_fuzzy_all_appearances, text_fuzzy_first_last_appearance
 from ..functions.text import clean_labels, py_remove_accents
 from .base import MethodBase, input_text
-
-
-def _options_as_dicts(ctx: ExtractionContext, labels_matched: list[str], lower_to_option) -> list[dict]:
-    return [lower_to_option[l] for l in labels_matched]
 
 
 class NaiveTextToMultiOptionMethod(MethodBase):

@@ -14,7 +14,6 @@ from typing import Any
 
 import pandas as pd
 
-from ..domain import ExtractionContext
 from ..functions import rexpy_lite
 from ..functions.dates import (
     DOTTED_DATE_PATTERN,
@@ -25,10 +24,6 @@ from ..functions.dates import (
 )
 from .base import MethodBase, input_text, input_texts_by_lines
 from .llm_codegen import LlmCodegenTextMethod
-
-
-def _rows(pdf: pd.DataFrame):
-    return (row for _, row in pdf.iterrows())
 
 
 class SameInputOutputMethod(MethodBase):

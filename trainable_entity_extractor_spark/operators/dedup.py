@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def normalized_text(col):
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
+from ..functions.text import normalize_text
 
 
 def words_array(col):
@@ -28,7 +26,7 @@ def words_array(col):
 
 def fingerprint(col):
     """Document fingerprint: md5 of normalized text (X-series analog)."""
-    return F.md5(normalized_text(col))
+    return F.md5(normalize_text(col))
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

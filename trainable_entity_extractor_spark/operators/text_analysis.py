@@ -81,9 +81,3 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             "detected_lang"
         ),
     )
-
-
-def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """md5 fingerprint of normalized text (rolling-hash analog, portable)."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    return docs.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
