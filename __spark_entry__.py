@@ -5,15 +5,14 @@
 each a (spark, sf_dir) -> DataFrame callable built on the package's
 operators.
 `oracle_sql()` — DuckDB-equivalent ANSI SQL per query (same column names,
-same deterministic rounding). Non-SQL-expressible ops omit the oracle and
-get the weaker rows-only check.
+same deterministic rounding), a pure function of this code: every query
+has one, and an oracle that fails to build raises.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import tempfile
 from collections.abc import Callable
 
 import pandas as pd  # module-level: pandas_udf type hints are strings
@@ -28,31 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _repartition_if_big(df: DataFrame, spark: SparkSession, key: str, min_bytes: int = 4 << 20) -> DataFrame:
-    """Scale-adaptive early exchange (guide §2.5: derive partitioning from
-    input size, don't tune a constant to one scale). The small tables are
-    single parquet row groups at every SF, so a heavy interpreted
-    projection fused into the scan runs on ONE core — an early keyed
-    repartition fixes that, but below a few MB of input the exchange
-    costs more than the serialization it removes (measured at sf0.1:
-    exact_dedup 0.35→0.64 WITH a forced repartition; at sf1.0 the same
-    exchange is a 2x win). Decide from the scanned bytes, driver-side
-    (inputFiles + stat — no Spark job). At crawl scale inputs pass the
-    threshold trivially and arrive pre-split, making the exchange a
-    cheap no-op re-key."""
-    try:
-        size = 0
-        for f in df.inputFiles():
-            p = f[len("file:"):] if f.startswith("file:") else f
-            size += os.path.getsize(p)
-    except Exception:
-        size = min_bytes  # unknown layout: keep the scale-safe branch
-    if size >= min_bytes:
-        width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        return df.repartition(width, key)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -249,12 +223,14 @@ def q_region_revenue(spark, sf_dir):
 
 def q_top_words(spark, sf_dir):
     """A1 word-frequency top-k over documents."""
+    from trainable_entity_extractor_spark.session import repartition_if_big
+
     d = _t(spark, sf_dir, "documents")
     # scale-adaptive repartition before the explode (single-row-group
-    # input; see _repartition_if_big — the explode+partial-agg is cheap
+    # input; see repartition_if_big — the explode+partial-agg is cheap
     # enough per row that only big inputs repay the exchange)
     words = (
-        _repartition_if_big(d.select("doc_id", "text"), spark, "doc_id")
+        repartition_if_big(d.select("doc_id", "text"), "doc_id")
         .select(F.explode(F.split(F.lower("text"), r"\s+")).alias("word"))
         .filter(F.col("word") != "")
     )
@@ -270,14 +246,16 @@ def q_exact_dedup(spark, sf_dir):
     """dedup: duplicate groups by md5 of the sorted distinct word set
     (bag-of-words signature — exact-dup generalization that fires on this
     corpus; raw-text md5 dedup is the degenerate case)."""
+    from trainable_entity_extractor_spark.session import repartition_if_big
+
     d = _t(spark, sf_dir, "documents")
     words = F.array_sort(
         F.array_distinct(F.filter(F.split(F.lower("text"), r"\s+"), lambda w: w != ""))
     )
     # scale-adaptive early repartition before the interpreted sort/md5
-    # projection (single-row-group input; see _repartition_if_big)
+    # projection (single-row-group input; see repartition_if_big)
     return (
-        _repartition_if_big(d.select("doc_id", "text"), spark, "doc_id")
+        repartition_if_big(d.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.md5(F.array_join(words, " ")).alias("fp"))
         .groupBy("fp")
         .agg(F.count("*").alias("dup_count"), F.min("doc_id").alias("keep_id"))
@@ -431,13 +409,14 @@ def q_ngram_jaccard_consecutive(spark, sf_dir):
 def q_cosine_topk(spark, sf_dir):
     """similarity: exact cosine top-10 neighbors of vec_id=0."""
     from trainable_entity_extractor_spark.operators.similarity import cosine_topk_self
+    from trainable_entity_extractor_spark.session import repartition_if_big
 
     e = _t(spark, sf_dir, "embeddings")
     # scale-adaptive repartition before the interpreted dot-product
-    # projection (single-row-group input; see _repartition_if_big). The
+    # projection (single-row-group input; see repartition_if_big). The
     # broadcast side (vec_id=0 lookup) still reads the raw table with
     # the pushed filter.
-    out = cosine_topk_self(_repartition_if_big(e, spark, "vec_id"), 0, k=10, lookup=e)
+    out = cosine_topk_self(repartition_if_big(e, "vec_id"), 0, k=10, lookup=e)
     return out.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
@@ -457,6 +436,7 @@ def q_triples_phrases(spark, sf_dir):
     """Stage C triple extraction on the documents table (substring-level
     fuzzy-100 join, first appearance per doc)."""
     from trainable_entity_extractor_spark.kg.triples import extract_triples, options_df
+    from trainable_entity_extractor_spark.session import repartition_if_big
 
     d = _t(spark, sf_dir, "documents")
     # scale-adaptive repartition before the normalize+contains join
@@ -464,14 +444,13 @@ def q_triples_phrases(spark, sf_dir):
     # exchange also replaces the aggregation's own — measured a win down
     # to sf0.1, hence the lower threshold than the default 4 MB; below
     # ~256 KB the exchange is pure overhead)
-    segments = _repartition_if_big(
+    segments = repartition_if_big(
         d.select(
             F.col("doc_id").cast("string").alias("url"),
             F.lit(0).alias("seg_idx"),
             F.lit(1).alias("page"),
             F.col("text"),
         ),
-        spark,
         "url",
         min_bytes=256 << 10,
     )
@@ -1164,14 +1143,11 @@ def q_tournament_e2e(spark, sf_dir):
     tournament's argmax), and the sorted matched-option ids per row
     (containment semantics make the expected subset follow from the
     k%2/k%3/k%5 formula)."""
-    import atexit
-    import shutil
-
     from trainable_entity_extractor_spark.domain import ExtractionIdentifier, Option
     from trainable_entity_extractor_spark.driver import SparkTrainableEntityExtractor
+    from trainable_entity_extractor_spark.session import scratch_dir_until_exit
 
-    out_dir = tempfile.mkdtemp(prefix="tee_tourney_entry_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = scratch_dir_until_exit("tee_tourney_entry_")
     identifier = ExtractionIdentifier("tourney_entry", output_path=out_dir)
     options = [Option("1", "apple"), Option("2", "banana"), Option("3", "orange")]
     o = lambda i: options[i].to_dict()
@@ -1354,14 +1330,14 @@ def q_lineage_replay(spark, sf_dir):
         verify_manifest,
         write_partitioned,
     )
+    from trainable_entity_extractor_spark.session import scratch_dir
 
     src = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 5000)
         .select(F.col("o_orderkey").alias("id"), F.col("o_orderpriority").alias("payload"))
     )
-    d = tempfile.mkdtemp(prefix="tee_lineage_entry_")
-    try:
+    with scratch_dir("tee_lineage_entry_") as d:
         write_partitioned(src, d, "id")
         ok_initial = verify_manifest(spark, d)
         for b in (3, 7):
@@ -1379,8 +1355,6 @@ def q_lineage_replay(spark, sf_dir):
             int(sum(1 for ok in ok_after.values() if not ok)),
             bool(all(ok_after.values())),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [row],
         "total_rows bigint, n_buckets int, initial_ok boolean, "
@@ -1856,7 +1830,6 @@ def q_orchestration_hygiene(spark, sf_dir):
     (>15% empty options on a 40-row 10-option corpus) are executed by
     the real policies. Every emitted field is a pinned boolean/count the
     oracle states as literals — any behavioral drift flips the hash."""
-    import shutil
     import time
     from pathlib import Path
 
@@ -1870,9 +1843,9 @@ def q_orchestration_hygiene(spark, sf_dir):
         get_stratified_split,
         get_train_test_split,
     )
+    from trainable_entity_extractor_spark.session import scratch_dir
 
-    base = tempfile.mkdtemp(prefix="tee_hygiene_")
-    try:
+    with scratch_dir("tee_hygiene_") as base:
         old = Path(base) / "run1" / "old_e"
         fresh = Path(base) / "run1" / "fresh_e"
         old.mkdir(parents=True)
@@ -1928,8 +1901,6 @@ def q_orchestration_hygiene(spark, sf_dir):
             len(s_te),
             bool(not (set(s_tr.index) & set(s_te.index))),
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         [row],
         "swept_stale boolean, kept_fresh boolean, stale_folder_wiped boolean, "
@@ -2410,29 +2381,24 @@ def q_streaming_running_totals(spark, sf_dir):
     at the whole-stream totals, so max(emitted) == batch GROUP BY
     regardless of how repartition(4) split the rows — a full DuckDB
     oracle for user-controlled streaming state."""
-    import shutil
-    import tempfile
-    import uuid
-
+    from trainable_entity_extractor_spark.session import scratch_dir
     from trainable_entity_extractor_spark.streaming.micro_batch import (
         running_totals,
     )
 
-    tag = uuid.uuid4().hex[:12]
-    in_dir = os.path.join(tempfile.gettempdir(), f"tee_stream_rt_{tag}")
     events = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "event_id")
         .repartition(4)
     )
-    events.write.mode("overwrite").parquet(in_dir)
-    try:
+    with scratch_dir("tee_stream_rt_") as in_dir:
+        events.write.mode("overwrite").parquet(in_dir)
         stream = (
             spark.readStream.schema("user_id long, event_id long")
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
         )
-        name = f"tee_stream_rt_{tag}"
+        name = os.path.basename(in_dir)  # unique, and a valid view name
         q = (
             running_totals(stream, "user_id", "event_id")
             .writeStream.format("memory")
@@ -2453,12 +2419,10 @@ def q_streaming_running_totals(spark, sf_dir):
             .orderBy("user_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)
 
 
 # one constant pair shared by the Spark query AND its driver-side parity
-# oracle (_phash_oracle_sql) — they must describe the SAME synthetic corpus
+# oracle (_parity_phash_sql) — they must describe the SAME synthetic corpus
 _PHASH_N, _PHASH_SEED = 200, 7
 
 
@@ -2470,10 +2434,10 @@ def q_phash_dedup(spark, sf_dir):
     encoding, which byte-level dedup misses and pHash catches.
 
     Oracle: no SQL engine decodes PNG, so the oracle is an
-    EXECUTOR-VS-DRIVER PARITY check — `_phash_oracle_sql` recomputes the
+    EXECUTOR-VS-DRIVER PARITY check — `_parity_phash_sql` recomputes the
     expected pHashes with the same pure-Python codec in a driver-side
-    loop (no Spark), writes them to parquet, and DuckDB reproduces the
-    bucket aggregation over that file. Not codec-independent (pixel-exact
+    loop (no Spark), inlines them as a VALUES list, and DuckDB reproduces
+    the bucket aggregation over it. Not codec-independent (pixel-exact
     decode + phash invariance stay pytest-gated in
     tests/test_multimodal.py), but it catches partition/Arrow
     nondeterminism in the distributed decode path."""
@@ -2495,8 +2459,8 @@ def q_jpeg_phash_dedup(spark, sf_dir):
     so the average phash buckets them — lossy-format-crossing dedup.
 
     Oracle: executor-vs-driver parity like `phash_dedup`
-    (`_jpeg_phash_oracle_sql` recomputes expected pHashes with the same
-    pure-Python codec driver-side; DuckDB aggregates them from parquet).
+    (`_parity_phash_sql` recomputes expected pHashes with the same
+    pure-Python codec driver-side; DuckDB aggregates the inlined rows).
     Codec wire-format compliance is separately pytest-gated both ways
     against javax.imageio (tests/test_jpeg.py)."""
     from trainable_entity_extractor_spark.operators.multimodal import (
@@ -2630,53 +2594,6 @@ def _synth_three_segments(spark, sf_dir, texts, pages):
     )
 
 
-def _grouped_doc_kernel(spark, seg_df, run_one, schema, key_col="doc_id", sort_col="seg_idx"):
-    """Per-document Python kernel via ONE mapInPandas pass over
-    key-partitioned, key-sorted batches (round 6, guide §2.3/§4).
-    `groupBy(key).applyInPandas` makes a Python call + a fresh pandas
-    frame per GROUP — at ~1,800 two-row groups that plumbing dominated
-    the kernel 3:1 (cross_page_fix / sentence_resegment: 4.7 s → ~1 s
-    spark-side at sf0.01). Groups may straddle Arrow batch boundaries;
-    the trailing group is carried over, same pattern as
-    kg/linking.score_blocks. The carry is guarded by `max_group_rows`
-    (fail fast with a clear error instead of quadratic re-concats if a
-    future caller feeds groups larger than an Arrow batch); current
-    callers have <= 3 rows per group by construction. `run_one` receives
-    exactly what applyInPandas passed before: one group's full frame."""
-    import numpy as np
-    import pandas as pd_mod
-
-    max_group_rows = 100_000
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    arranged = seg_df.repartition(width, key_col).sortWithinPartitions(key_col, sort_col)
-
-    def _run(batches):
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                if len(carry) > max_group_rows:
-                    raise ValueError(
-                        f"_grouped_doc_kernel: group {carry[key_col].iloc[0]!r} exceeds "
-                        f"{max_group_rows} rows; this helper is for small per-document "
-                        "groups — use an explicit bounded operator instead"
-                    )
-                pdf = pd_mod.concat([carry, pdf], ignore_index=True)
-            keys = pdf[key_col].to_numpy()
-            change = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            last_start = int(change[-1]) if len(change) else 0
-            carry = pdf.iloc[last_start:]
-            head = pdf.iloc[:last_start]
-            if len(head):
-                out = [run_one(g) for _, g in head.groupby(key_col, sort=False)]
-                yield pd_mod.concat(out, ignore_index=True)
-        if carry is not None and len(carry):
-            yield run_one(carry.reset_index(drop=True))
-
-    return arranged.mapInPandas(_run, schema=schema)
-
-
 def q_cross_page_fix(spark, sf_dir):
     """W10 cross-page segment fix on the driver gate
     (methods/pdf_to_multi_option.py fix_two_pages_segments —
@@ -2685,14 +2602,15 @@ def q_cross_page_fix(spark, sf_dir):
     all three branches: variant 0 (no trailing '.' + next text segment on
     a LATER page) must merge and drop the absorbed segment; variant 1
     (no '.' but same page) and variant 2 (trailing '.') must not. The
-    kernel runs per-document (batched mapInPandas, round 6); the oracle rebuilds the
-    expected segment lists from the o_orderkey % 3 formula, never from
-    the kernel."""
+    kernel runs per-document (map_groups: one mapInArrow pass); the
+    oracle rebuilds the expected segment lists from the o_orderkey % 3
+    formula, never from the kernel."""
     import pandas as pd_mod
 
     from trainable_entity_extractor_spark.methods.pdf_to_multi_option import (
         fix_two_pages_segments,
     )
+    from trainable_entity_extractor_spark.operators.sorted_groups import map_groups
 
     k = F.col("o_orderkey").cast("string")
     variant = F.col("o_orderkey") % 3
@@ -2720,8 +2638,8 @@ def q_cross_page_fix(spark, sf_dir):
             }
         )
 
-    return _grouped_doc_kernel(
-        spark, seg_df, run, "doc_id long, out_idx int, page int, text string"
+    return map_groups(
+        seg_df, run, "doc_id long, out_idx int, page int, text string", "doc_id", "seg_idx"
     ).orderBy("doc_id", "out_idx")
 
 
@@ -2742,6 +2660,7 @@ def q_sentence_resegment(spark, sf_dir):
     from trainable_entity_extractor_spark.methods.pdf_to_multi_option import (
         sentence_segments,
     )
+    from trainable_entity_extractor_spark.operators.sorted_groups import map_groups
 
     k = F.col("o_orderkey").cast("string")
     variant = F.col("o_orderkey") % 3
@@ -2777,8 +2696,8 @@ def q_sentence_resegment(spark, sf_dir):
             }
         )
 
-    return _grouped_doc_kernel(
-        spark, seg_df, run, "doc_id long, sent_idx int, text string"
+    return map_groups(
+        seg_df, run, "doc_id long, sent_idx int, text string", "doc_id", "seg_idx"
     ).orderBy("doc_id", "sent_idx")
 
 
@@ -3424,7 +3343,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracle SQL — DuckDB side (same column names, same rounding)
 # ---------------------------------------------------------------------------
 
-def _oracle_sql_base() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
+    from trainable_entity_extractor_spark.operators.multimodal import (
+        synth_jpeg_rows,
+        synth_png_rows,
+    )
+
     return {
         "pricing_summary": """
             SELECT l_returnflag, l_linestatus,
@@ -3646,7 +3570,7 @@ def _oracle_sql_base() -> dict[str, str]:
             WHERE vec_id <> 0
             ORDER BY cosine DESC, vec_id LIMIT 10
         """,
-        "label_centroid_sim": None,  # filled dynamically below
+        "label_centroid_sim": _label_centroid_sql(_embedding_dim()),
         "triples_phrases": """
             WITH opts(obj_id, label) AS (VALUES ('1','table hash'),
                  ('2','customer join'), ('3','part filter'),
@@ -4363,6 +4287,11 @@ def _oracle_sql_base() -> dict[str, str]:
             SELECT u AS id, min(reached) AS component
             FROM walk GROUP BY u ORDER BY id
         """,
+        "phash_dedup": _parity_phash_sql(synth_png_rows(_PHASH_N, _PHASH_SEED)),
+        "jpeg_phash_dedup": _parity_phash_sql(synth_jpeg_rows(_PHASH_N, _PHASH_SEED)),
+        "country_extraction": _country_oracle_sql(),
+        "truecase": _truecase_oracle_sql(),
+        "sanitize_language": _sanitize_language_oracle_sql(),
     }
 
 
@@ -4380,115 +4309,42 @@ def _label_centroid_sql(dim: int) -> str:
     """
 
 
-def _embedding_dim_at(path: str, default: int = 64) -> int:
+def _embedding_dim_at(path: str) -> int:
     """Embedding dimensionality from one parquet file, read driver-side
     with DuckDB (no Spark job)."""
-    try:
-        import duckdb
+    import duckdb
 
-        if os.path.exists(path):
-            return duckdb.sql(f"select len(embedding) from '{path}' limit 1").fetchone()[0]
-    except Exception:
-        pass
-    return default
+    return duckdb.sql(f"select len(embedding) from '{path}' limit 1").fetchone()[0]
 
 
 def _embedding_dim(default: int = 64) -> int:
     for sf in ("sf0.01", "sf0.001", "sf0.1"):
         path = f"/root/testdata/{sf}/embeddings.parquet"
         if os.path.exists(path):
-            return _embedding_dim_at(path, default)
+            return _embedding_dim_at(path)
     return default
 
 
-def _parity_phash_sql(tag: str, rows: list[tuple[str, bytes]]) -> str | None:
+def _parity_phash_sql(rows: list[tuple[str, bytes]]) -> str:
     """Executor-vs-driver parity oracle for the phash entries: recompute
     the expected (asset_id, phash) table with the SAME pure-Python codec
-    in a plain driver loop (no Spark, no Arrow, no partitioning), write
-    it to parquet, and have DuckDB reproduce the bucket aggregation over
-    it. Catches any partition-/batch-dependent nondeterminism in the
+    in a plain driver loop (no Spark, no Arrow, no partitioning), inline
+    it as a VALUES list, and have DuckDB reproduce the bucket aggregation
+    over it. Catches any partition-/batch-dependent nondeterminism in the
     distributed mapInPandas decode; codec correctness itself is
     pytest-gated (tests/test_multimodal.py, tests/test_jpeg.py)."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    from trainable_entity_extractor_spark.operators.multimodal import (
+        average_phash64,
+        decode_image_array,
+    )
 
-        from trainable_entity_extractor_spark.operators.multimodal import (
-            average_phash64,
-            decode_image_array,
-        )
-
-        # pid-unique filename: a fixed world-visible path races between
-        # concurrent runs (torn read -> spurious oracle failure) and a
-        # pre-existing file owned by another user blocks the write
-        path = os.path.join(
-            tempfile.gettempdir(), f"tee_phash_oracle_{tag}_p{os.getpid()}.parquet"
-        )
-        ids, hashes = [], []
-        for aid, blob in rows:
-            ids.append(aid)
-            hashes.append(average_phash64(decode_image_array(blob)))
-        pq.write_table(
-            pa.table({"asset_id": pa.array(ids, pa.string()), "phash": pa.array(hashes, pa.int64())}),
-            path,
-        )
-        return f"""
+    values = ",\n                   ".join(
+        "('{}', {})".format(aid.replace("'", "''"), average_phash64(decode_image_array(blob)))
+        for aid, blob in rows
+    )
+    return f"""
             SELECT phash, count(*)::BIGINT AS n_assets, min(asset_id) AS keep_id
-            FROM read_parquet('{path}')
+            FROM (VALUES {values}) AS t(asset_id, phash)
             GROUP BY phash HAVING count(*) > 1
             ORDER BY phash
         """
-    except Exception:
-        # if the aux parquet can't be produced, fall back to the driver's
-        # rows-only check rather than a guaranteed-failing oracle
-        return None
-
-
-def _phash_oracle_sql(n: int = _PHASH_N, seed: int = _PHASH_SEED) -> str | None:
-    try:
-        from trainable_entity_extractor_spark.operators.multimodal import synth_png_rows
-
-        return _parity_phash_sql(f"n{n}_s{seed}", synth_png_rows(n, seed))
-    except Exception:
-        return None
-
-
-def _jpeg_phash_oracle_sql(n: int = _PHASH_N, seed: int = _PHASH_SEED) -> str | None:
-    try:
-        from trainable_entity_extractor_spark.operators.multimodal import synth_jpeg_rows
-
-        return _parity_phash_sql(f"jpeg_n{n}_s{seed}", synth_jpeg_rows(n, seed))
-    except Exception:
-        return None
-
-
-def _finalize_oracles(d: dict) -> dict:
-    out = {}
-    for k, v in d.items():
-        if k == "label_centroid_sim":
-            out[k] = _label_centroid_sql(_embedding_dim())
-        elif v is not None:
-            out[k] = v
-    phash_sql = _phash_oracle_sql()
-    if phash_sql is not None:
-        out["phash_dedup"] = phash_sql
-    jpeg_sql = _jpeg_phash_oracle_sql()
-    if jpeg_sql is not None:
-        out["jpeg_phash_dedup"] = jpeg_sql
-    try:
-        out["country_extraction"] = _country_oracle_sql()
-    except Exception:
-        pass  # driver falls back to the rows-only check
-    try:
-        out["truecase"] = _truecase_oracle_sql()
-    except Exception:
-        pass
-    try:
-        out["sanitize_language"] = _sanitize_language_oracle_sql()
-    except Exception:
-        pass
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    return _finalize_oracles(_oracle_sql_base())

@@ -209,3 +209,23 @@ def test_fill_bytes_before_markers_are_skipped():
     dec, meta = jpeg_decode(padded)
     assert meta["width"] == 8 and meta["height"] == 8
     assert np.array_equal(dec, jpeg_decode(payload)[0])
+
+
+def test_fill_bytes_running_to_the_end_raise():
+    """A run of 0xFF fill bytes that reaches the end of the payload has no
+    marker after it: a clean ValueError, not a fill byte read as a
+    marker with a garbage segment length (ADVICE r6)."""
+    payload = jpeg_encode(np.full((8, 8), 99, dtype=np.uint8), 90)
+    head = payload[: payload.find(b"\xff\xda")]  # everything before SOS
+    for n_fill in (4, 7):
+        with pytest.raises(ValueError, match="truncated JPEG marker stream"):
+            jpeg_decode(head + b"\xff" * n_fill)
+
+
+def test_segment_cut_short_raises_value_error():
+    """A payload that ends inside a segment raises ValueError, not the
+    struct.error of reading the missing bytes."""
+    payload = jpeg_encode(np.full((8, 8), 99, dtype=np.uint8), 90)
+    sof = payload.find(b"\xff\xc0")
+    with pytest.raises(ValueError, match="truncated JPEG segment"):
+        jpeg_decode(payload[: sof + 6])

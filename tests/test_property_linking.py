@@ -71,7 +71,7 @@ def score_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float, n_perms: in
 
 N_PERMS = 8
 BANDS = 2
-CAP = 4  # tiny cap so oversized-block skip paths trigger constantly
+CAP = 4  # tiny cap: many blocks exceed it; the census drops them before the scorer
 THRESHOLD = 0.3
 
 # signatures drawn from a 2-symbol alphabet: band keys collide heavily,

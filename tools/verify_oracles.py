@@ -64,7 +64,8 @@ def main(only: list[str] | None = None):
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"ok(rows-only) {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
+            print(f"FAIL {name}: no oracle")
+            failures.append(name)
             continue
         try:
             rel = con.sql(oracles[name])

@@ -13,12 +13,13 @@ forms) are bounded upstream by the LSH block cap.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import scratch_dir_until_exit
 
 
 def _scratch_dir(spark) -> str:
@@ -30,11 +31,7 @@ def _scratch_dir(spark) -> str:
     multi-node cluster set `spark.tee.scratch.dir` (or a checkpoint dir)
     to shared storage — an executor cannot read the driver's /tmp.
     """
-    conf_dir = None
-    try:
-        conf_dir = spark.conf.get("spark.tee.scratch.dir")
-    except Exception:
-        conf_dir = None
+    conf_dir = spark.conf.get("spark.tee.scratch.dir", None)
     if conf_dir:
         return conf_dir
     ckpt = spark.sparkContext.getCheckpointDir()
@@ -133,11 +130,8 @@ def _driver_union_find(spark, pdf, id_type: T.DataType) -> DataFrame:
     # job. Such services should point spark.tee.scratch.dir at a volume
     # sized for it (or periodically restart the session); the bench /
     # batch lifecycle this engine targets holds a handful at most.
-    tmp = tempfile.mkdtemp(prefix="tee_uf_", dir=_scratch_dir(spark))
+    tmp = scratch_dir_until_exit("tee_uf_", _scratch_dir(spark))
     pq.write_table(pa.Table.from_pandas(out, preserve_index=False), f"{tmp}/part-0.parquet")
-    import atexit
-
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     return spark.read.parquet(tmp)
 
 

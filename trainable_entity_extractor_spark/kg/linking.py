@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text
+from ..operators.sorted_groups import complete_groups
 
 DEFAULT_PERMS = 32
 # 5 bands x 6 rows (30 of 32 slots): P(candidate | j=0.9) ≈ 98% while
@@ -303,7 +304,7 @@ def score_blocks(
     duplication-heavy corpora pairs outnumber mentions ~30:1 at cap 64;
     materializing them and joining the signature table twice was >80% of
     pipeline wall-time at 400k pages. Cost now: a skinny block census,
-    ONE (band, key) shuffle carrying signatures, then a map stage.
+    ONE (band, key) shuffle that moves the signatures, then a map stage.
     """
     rows_per_band = n_perms // bands
     band_structs = F.array(
@@ -387,26 +388,16 @@ def score_blocks(
         import pyarrow.compute as pc
 
         triu_cache: dict[int, tuple] = {}
-
-        def emit(bounds, sig, ids):
-            """Score the blocks [bounds[i], bounds[i + 1]) of sig/ids."""
-            starts = bounds[:-1]
+        # the census counts the same rows and keeps only blocks of
+        # 2..block_cap rows, so every block here has a pair and fits the
+        # cap; complete_groups raises if that invariant ever breaks
+        for run, bounds in complete_groups(batches, ["band", "key"], block_cap):
             sizes = np.diff(bounds)
-            # size the pair scratch from the blocks that will actually emit:
-            # over-cap blocks are skipped below (skew guard), so counting
-            # them here would allocate O(s^2) scratch for a hot-key
-            # mega-block that lands inside one Arrow batch — the exact OOM
-            # the cap exists to prevent.
-            emit_sizes = np.where((sizes < 2) | (sizes > block_cap), 0, sizes)
-            pair_total = int((emit_sizes * (emit_sizes - 1) // 2).sum())
-            if pair_total == 0:
-                return None
+            pair_total = int((sizes * (sizes - 1) // 2).sum())
             i_out = np.empty(pair_total, dtype=np.int64)
             j_out = np.empty(pair_total, dtype=np.int64)
             pos = 0
-            for st, s in zip(starts, sizes):
-                if s < 2 or s > block_cap:  # cap = hot-key/skew guard
-                    continue
+            for st, s in zip(bounds[:-1], sizes):
                 cached = triu_cache.get(s)
                 if cached is None:
                     cached = triu_cache[s] = np.triu_indices(int(s), k=1)
@@ -415,16 +406,18 @@ def score_blocks(
                 i_out[pos : pos + c] = iu + st
                 j_out[pos : pos + c] = ju + st
                 pos += c
+            sig = np.column_stack([run.column(lane).to_numpy() for lane in lanes])
             agree = (sig[i_out] == sig[j_out]).sum(axis=1) / npf
             ok = agree >= threshold
             if not ok.any():
-                return None
+                continue
+            ids = run.column("mention_id")
             a_arr = ids.take(pa.array(i_out[ok]))
             b_arr = ids.take(pa.array(j_out[ok]))
             # utf8 byte order == codepoint order, so this matches the old
             # Python string comparison exactly
             swap = pc.greater(a_arr, b_arr)
-            return pa.RecordBatch.from_arrays(
+            yield pa.RecordBatch.from_arrays(
                 [
                     pc.if_else(swap, b_arr, a_arr),
                     pc.if_else(swap, a_arr, b_arr),
@@ -432,49 +425,6 @@ def score_blocks(
                 ],
                 ["a", "b", "jaccard"],
             )
-
-        # blocks are contiguous within the sorted partition but may span
-        # Arrow batch boundaries — carry the trailing block over. A block
-        # larger than the cap is dropped as soon as it exceeds it (skew
-        # guard), so the carry buffer never grows past block_cap rows even
-        # for a mega-block of a hot surface form.
-        carry = None  # (band, key, sig, ids) of the trailing block
-        skip_key = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            band = batch.column("band").to_numpy()
-            key = batch.column("key").to_numpy()
-            sig = np.column_stack([batch.column(lane).to_numpy() for lane in lanes])
-            ids = batch.column("mention_id")
-            if skip_key is not None:
-                keep = ~((band == skip_key[0]) & (key == skip_key[1]))
-                if not keep.any():
-                    continue  # whole batch is still the oversized block
-                first_keep = int(np.argmax(keep))
-                band, key, sig = band[first_keep:], key[first_keep:], sig[first_keep:]
-                ids = ids.slice(first_keep)
-                skip_key = None
-            if carry is not None:
-                band = np.concatenate([carry[0], band])
-                key = np.concatenate([carry[1], key])
-                sig = np.vstack([carry[2], sig])
-                ids = pa.concat_arrays([carry[3], ids])
-            change = np.flatnonzero((band[1:] != band[:-1]) | (key[1:] != key[:-1])) + 1
-            last_start = int(change[-1]) if len(change) else 0
-            if len(band) - last_start > block_cap:
-                skip_key = (band[last_start], key[last_start])
-                carry = None
-            else:
-                carry = (band[last_start:], key[last_start:], sig[last_start:], ids.slice(last_start))
-            # every block before the trailing one is complete
-            out = emit(np.concatenate([[0], change]), sig, ids)
-            if out is not None:
-                yield out
-        if carry is not None:
-            out = emit(np.array([0, len(carry[0])]), carry[2], carry[3])
-            if out is not None:
-                yield out
 
     edges = arranged.mapInArrow(_score, schema="a string, b string, jaccard double")
     # a pair can surface in several bands with the same score — dedup the

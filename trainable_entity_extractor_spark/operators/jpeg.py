@@ -288,10 +288,17 @@ def jpeg_decode(payload: bytes) -> tuple[np.ndarray, dict]:
         while payload[pos + 1] == 0xFF and pos + 5 <= len(payload):
             pos += 1
         marker = payload[pos + 1]
+        if marker == 0xFF:  # the fill run reaches the end of the payload
+            raise ValueError("truncated JPEG marker stream")
         pos += 2
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue
+        # the loop guard leaves both length bytes in range; the segment
+        # they announce may not be, and a short body would reach the
+        # struct reads below as struct.error
         (seglen,) = struct.unpack(">H", payload[pos : pos + 2])
+        if pos + seglen > len(payload):
+            raise ValueError("truncated JPEG segment")
         body = payload[pos + 2 : pos + seglen]
         if marker == 0xDB:  # DQT
             b = 0
